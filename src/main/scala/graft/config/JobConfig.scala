@@ -360,9 +360,7 @@ object JobConfig {
     (groupBy, aggs)
   }
 
-  /** unpivot config, shared by the batch and streaming dispatches so the
-    * two folds can never drift on parsing/defaults (the parity spec's
-    * guarantee depends on it): (id_columns, value_columns, var, value). */
+  /** unpivot config: (id_columns, value_columns, var, value). */
   def parseUnpivot(spec: ComponentSpec): (Seq[String], Seq[String], String, String) = {
     val values = spec.strSeqParam("value_columns")
     require(values.nonEmpty, s"unpivot ${spec.name}: needs value_columns")
@@ -392,7 +390,7 @@ object JobConfig {
         s"component ${spec.name}: missing 'splits' ([{name, fraction}, ...])")
     }
 
-  /** sample config, shared by the batch and streaming folds:
+  /** sample config:
     * (id_column, fraction, seed, strata_column, strata_fractions).
     * `fraction` is required; `strata_fractions` is a {value: rate}
     * object overriding it per stratum (sorted by value so the built

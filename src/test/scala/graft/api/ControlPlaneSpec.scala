@@ -260,6 +260,35 @@ class ControlPlaneSpec extends SparkTestBase {
       sys.error("scheduler must not be touched"), _ => ()) === 1)
   }
 
+  test("REST: POST /jobs with a streaming-only comp_type is a 400, not a failed run") {
+    val reg = new ControlPlane.JobRegistry(spark)
+    val server = ControlPlane.serve(reg)
+    val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+    val nSchema = """{ "fields": [ { "name": "n", "data_type": "integer" } ] }"""
+    val job =
+      s"""{ "name": "streamonly", "components": [
+         |  { "name": "r", "comp_type": "read_csv", "filepath": "${tmp("so_in")}",
+         |    "routes": { "out": [ { "to": "sa", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $abSchema } },
+         |  { "name": "sa", "comp_type": "streaming_aggregation",
+         |    "time_column": "a", "watermark": "1 hour", "window": "1 hour",
+         |    "aggregations": [ { "src": "*", "op": "count", "dest": "n" } ],
+         |    "in_port_schemas": { "in": $abSchema },
+         |    "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $nSchema } },
+         |  { "name": "w", "comp_type": "write_csv", "filepath": "${tmp("so_out")}",
+         |    "in_port_schemas": { "in": $nSchema } } ] }""".stripMargin
+    try {
+      val res = HttpClient.newHttpClient().send(
+        HttpRequest.newBuilder(URI.create(s"$base/jobs"))
+          .POST(HttpRequest.BodyPublishers.ofString(job)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(res.statusCode() === 400)
+      assert(res.body().contains("streaming_aggregation"))
+      assert(reg.listJobs().isEmpty)
+    } finally ControlPlane.stop(server)
+  }
+
   test("REST surface: POST/GET/DELETE /jobs, POST /execution, GET /executions") {
     import spark.implicits._
     val reg = new ControlPlane.JobRegistry(spark)

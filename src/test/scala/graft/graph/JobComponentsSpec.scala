@@ -837,22 +837,22 @@ class JobComponentsSpec extends SparkTestBase {
   test("embedding dedup depth: sized from corpus count unless pinned") {
     // The 100x ScaleProbe showed fixed (16, 8) degenerating at 200k
     // vectors; an omitted-config job must get the measured rule instead.
-    val auto = JobGraph.embeddingDepth(None, None, 0.95, 200000L)
+    val auto = Components.embeddingDepth(None, None, 0.95, 200000L)
     assert(auto !== ((16, 8)))
     assert(auto._2 >= 17) // r ~ log2(200k) ≈ 17.6
     // Explicit config is an override — and pays no count() action
     // (corpusCount is by-name; counting here would throw).
-    val pinned = JobGraph.embeddingDepth(Some(16), Some(8), 0.95,
+    val pinned = Components.embeddingDepth(Some(16), Some(8), 0.95,
       sys.error("count() must not run for a fully pinned config"))
     assert(pinned === ((16, 8)))
     // Half-pinned bands: the explicit half is honored, r derived from n.
-    val half = JobGraph.embeddingDepth(Some(20), None, 0.95, 200000L)
+    val half = Components.embeddingDepth(Some(20), None, 0.95, 200000L)
     assert(half._1 === 20)
     assert(half._2 >= 17)
     // Half-pinned r: bands must be solved FOR THE PINNED r (not for a
     // fresh r ~ log2(n), which would satisfy neither rule half) — and r
     // alone needs no corpus count.
-    val rPinned = JobGraph.embeddingDepth(None, Some(18), 0.95,
+    val rPinned = Components.embeddingDepth(None, Some(18), 0.95,
       sys.error("count() must not run when r is pinned"))
     assert(rPinned._2 === 18)
     assert(rPinned._1 ===

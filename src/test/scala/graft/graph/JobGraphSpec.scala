@@ -334,6 +334,26 @@ class JobGraphSpec extends SparkTestBase {
     assert(e.getMessage.contains("unknown comp_type 'text_normalise'"))
   }
 
+  test("validation: a streaming-only comp_type in a batch job fails at validate, not mid-run") {
+    val nSchema = """{ "fields": [ { "name": "n", "data_type": "integer" } ] }"""
+    val e = intercept[IllegalArgumentException] {
+      JobGraph.validate(specOf(
+        s"""{ "name": "r", "comp_type": "read_csv", "filepath": "x",
+           |  "routes": { "out": [ { "to": "sa", "in_port": "in" } ] },
+           |  "out_port_schemas": { "out": $abSchema } }""".stripMargin,
+        s"""{ "name": "sa", "comp_type": "streaming_aggregation",
+           |  "time_column": "a", "watermark": "1 hour", "window": "1 hour",
+           |  "aggregations": [ { "src": "*", "op": "count", "dest": "n" } ],
+           |  "in_port_schemas": { "in": $abSchema },
+           |  "routes": { "out": [ { "to": "w", "in_port": "in" } ] },
+           |  "out_port_schemas": { "out": $nSchema } }""".stripMargin,
+        s"""{ "name": "w", "comp_type": "write_csv", "filepath": "y",
+           |  "in_port_schemas": { "in": $nSchema } }""".stripMargin))
+    }
+    assert(e.getMessage.contains("component sa: comp_type 'streaming_aggregation'"))
+    assert(e.getMessage.contains("StreamingJobs"))
+  }
+
   test("build: a route from a port the component never produces is loud, not a thinner merge") {
     // schema_mapping in map mode produces ONLY its rules_by_dest ports;
     // routing the declared-but-unproduced extra port used to be silently

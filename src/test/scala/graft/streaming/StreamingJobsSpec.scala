@@ -763,8 +763,17 @@ class StreamingJobsSpec extends SparkTestBase {
          |                { "name": "rest", "fraction": 0.3 } ],
          |    "in_port_schemas": { "in": $inSchema },
          |    "routes": { "train": [ { "to": "up", "in_port": "in" } ],
-         |                "rest":  [ { "to": "wr", "in_port": "in" } ] },
+         |                "rest":  [ { "to": "tee", "in_port": "in" } ] },
          |    "out_port_schemas": { "train": $inSchema, "rest": $inSchema } },
+         |  { "name": "tee", "comp_type": "split", "extra_output_ports": ["x", "y"],
+         |    "in_port_schemas": { "in": $inSchema },
+         |    "routes": { "x": [ { "to": "mg", "in_port": "in" } ],
+         |                "y": [ { "to": "mg", "in_port": "in" } ] },
+         |    "out_port_schemas": { "x": $inSchema, "y": $inSchema } },
+         |  { "name": "mg", "comp_type": "merge",
+         |    "in_port_schemas": { "in": $inSchema },
+         |    "routes": { "merge": [ { "to": "wr", "in_port": "in" } ] },
+         |    "out_port_schemas": { "merge": $inSchema } },
          |  { "name": "up", "comp_type": "unpivot", "id_columns": ["id"],
          |    "value_columns": ["va", "vb"],
          |    "in_port_schemas": { "in": $inSchema },
@@ -782,6 +791,9 @@ class StreamingJobsSpec extends SparkTestBase {
     assert(slurp(spark.read.parquet(sRest)) === slurp(spark.read.parquet(bRest)))
     assert(slurp(spark.read.parquet(sMelt)) === slurp(spark.read.parquet(bMelt)))
     assert(spark.read.parquet(sMelt).count() > 0)
+    // split → merge unions the tee's two copies: every `rest` row twice
+    val rest = spark.read.parquet(sRest)
+    assert(rest.count() > 0 && rest.count() === 2 * rest.distinct().count())
   }
 
   test("json_extract streams: typed-extraction parity with the batch fold") {
@@ -851,6 +863,20 @@ class StreamingJobsSpec extends SparkTestBase {
         |  { "name": "url_path", "data_type": "string", "nullable": true },
         |  { "name": "chunk_index", "data_type": "integer" },
         |  { "name": "chunk_text", "data_type": "string" } ] }""".stripMargin
+    val flaggedSchema =
+      """{ "fields": [
+        |  { "name": "id", "data_type": "integer" },
+        |  { "name": "text", "data_type": "string", "nullable": true },
+        |  { "name": "url", "data_type": "string" },
+        |  { "name": "g_word_count", "data_type": "boolean" },
+        |  { "name": "g_mean_word_len", "data_type": "boolean" },
+        |  { "name": "g_symbol_ratio", "data_type": "boolean" },
+        |  { "name": "g_bullet_lines", "data_type": "boolean" },
+        |  { "name": "g_ellipsis_lines", "data_type": "boolean" },
+        |  { "name": "g_alpha_words", "data_type": "boolean" },
+        |  { "name": "g_stopwords", "data_type": "boolean" },
+        |  { "name": "gopher_pass", "data_type": "boolean" } ] }""".stripMargin
+    val gopherRules = """"min_words": 2, "min_stop_hits": 0"""
     def cfg(out: String) =
       s"""{ "name": "cur", "components": [
          |  { "name": "r", "comp_type": "read_parquet", "filepath": "$in",
@@ -859,8 +885,22 @@ class StreamingJobsSpec extends SparkTestBase {
          |  { "name": "tn", "comp_type": "text_normalize",
          |    "accent_fold": true, "strip_punct": true,
          |    "in_port_schemas": { "in": $inSchema },
-         |    "routes": { "out": [ { "to": "uf", "in_port": "in" } ] },
+         |    "routes": { "out": [ { "to": "uf", "in_port": "in" },
+         |                         { "to": "gd", "in_port": "in" },
+         |                         { "to": "gf", "in_port": "in" } ] },
          |    "out_port_schemas": { "out": $inSchema } },
+         |  { "name": "gd", "comp_type": "gopher_filter", "emit": "docs", $gopherRules,
+         |    "in_port_schemas": { "in": $inSchema },
+         |    "routes": { "out": [ { "to": "wgd", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $inSchema } },
+         |  { "name": "wgd", "comp_type": "write_parquet", "filepath": "${out}_gd",
+         |    "in_port_schemas": { "in": $inSchema } },
+         |  { "name": "gf", "comp_type": "gopher_filter", "emit": "flagged", $gopherRules,
+         |    "in_port_schemas": { "in": $inSchema },
+         |    "routes": { "out": [ { "to": "wgf", "in_port": "in" } ] },
+         |    "out_port_schemas": { "out": $flaggedSchema } },
+         |  { "name": "wgf", "comp_type": "write_parquet", "filepath": "${out}_gf",
+         |    "in_port_schemas": { "in": $flaggedSchema } },
          |  { "name": "uf", "comp_type": "url_features",
          |    "in_port_schemas": { "in": $inSchema },
          |    "routes": { "out": [ { "to": "ck", "in_port": "in" } ] },
@@ -883,6 +923,11 @@ class StreamingJobsSpec extends SparkTestBase {
       .orderBy("chunk_index").select("chunk_text").as[String].collect().toSeq
     assert(d1 === Seq("abc def ", "f ghijkl", "klm"))
     assert(spark.read.parquet(sOut).filter($"id" === 3L).count() === 0)
+    // gopher_filter parity on both faces: only doc 1 has >= 2 words
+    for (g <- Seq("_gd", "_gf"))
+      assert(slurp(spark.read.parquet(sOut + g)) === slurp(spark.read.parquet(bOut + g)))
+    assert(spark.read.parquet(sOut + "_gd").select("id").as[Long].collect().toSeq === Seq(1L))
+    assert(spark.read.parquet(sOut + "_gf").filter($"gopher_pass").count() === 1)
   }
 
   test("streaming_dedup_against: static corpus drops known keys, statelessly") {
