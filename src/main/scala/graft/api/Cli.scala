@@ -101,7 +101,8 @@ object Cli {
       case "execution" :: "get" :: execId :: Nil =>
         registry.getExecution(execId) match {
           case Some(e) => out(s"""{"execution":${ControlPlane.execJson(e)},""" +
-            s""""attempts":${ControlPlane.attemptsJson(e)}}"""); 0
+            s""""attempts":${ControlPlane.attemptsJson(e)},""" +
+            s""""metrics":${ControlPlane.metricsJson(e)}}"""); 0
           case None    => out(s"Execution $execId not found"); 1
         }
       case "execution" :: "attempts" :: execId :: Nil =>

@@ -49,7 +49,8 @@ object ControlPlane {
       linesForwarded: Map[String, Long] = Map.empty,
       throughputRowsPerSec: Double = 0.0,
       linesReceived: Map[String, Long] = Map.empty,
-      linesDismissed: Map[String, Long] = Map.empty)
+      linesDismissed: Map[String, Long] = Map.empty,
+      metricsComplete: Boolean = true)
 
   /** `spark` is by-name/lazy: only `execute` forces it, so metadata-only
     * callers (CLI list/get/create paths) never pay SparkSession startup.
@@ -167,6 +168,7 @@ object ControlPlane {
         s""","lines_forwarded":${linesJson(e)},"throughput_rows_per_sec":${e.throughputRowsPerSec}""" +
         s""","lines_received":${countsJson(e.linesReceived)}""" +
         s""","lines_dismissed":${countsJson(e.linesDismissed)}""" +
+        s""","metrics_complete":${e.metricsComplete}""" +
         s""","attempt_list":$atts}"""
     }
 
@@ -194,7 +196,9 @@ object ControlPlane {
         (j \ "error").extractOpt[String], atts,
         (j \ "environment").extractOpt[String], counts("lines_forwarded"),
         (j \ "throughput_rows_per_sec").extractOpt[Double].getOrElse(0.0),
-        counts("lines_received"), counts("lines_dismissed"))
+        counts("lines_received"), counts("lines_dismissed"),
+        // lines written before the key existed reload as complete
+        (j \ "metrics_complete").extractOpt[Boolean].getOrElse(true))
     }
 
     private def nextId(prefix: String): String = s"$prefix-${seq.incrementAndGet()}"
@@ -256,7 +260,7 @@ object ControlPlane {
           String.valueOf(e.getMessage)).take(300)),
         res.attemptRecords, environment.map(_.toUpperCase),
         res.linesForwarded, res.throughputRowsPerSec,
-        res.linesReceived, res.linesDismissed)
+        res.linesReceived, res.linesDismissed, res.metricsComplete)
       putExec(rec)
       persistExec(rec)
       rec
@@ -356,6 +360,14 @@ object ControlPlane {
     m.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${quote(k)}:$v" }.mkString("{", ",", "}")
   private[api] def linesJson(e: ExecutionRecord): String = countsJson(e.linesForwarded)
+  /** The per-component counts of an execution; `metrics_complete` is
+    * false when the run's counts may be missing (JobRunner scaladoc). */
+  private[api] def metricsJson(e: ExecutionRecord): String =
+    s"""{"lines_received":${countsJson(e.linesReceived)},""" +
+      s""""lines_forwarded":${linesJson(e)},""" +
+      s""""lines_dismissed":${countsJson(e.linesDismissed)},""" +
+      s""""throughput_rows_per_sec":${e.throughputRowsPerSec},""" +
+      s""""metrics_complete":${e.metricsComplete}}"""
   private[api] def attemptJson(a: JobRunner.Attempt): String =
     s"""{"index":${a.index},"started_at_ms":${a.startedAtMs},"wall_ms":${a.wallMs},""" +
       s""""status":${quote(a.status)}""" +
@@ -375,10 +387,21 @@ object ControlPlane {
   /** Start the REST server on `port` (0 = ephemeral); returns the server —
     * callers stop() it. Pass a `scheduler` to expose the /schedules
     * surface (POST/GET/PUT/DELETE plus pause/resume/run-now,
-    * reference: src/etl_core/api/routers/schedules.py:64-137). */
+    * reference: src/etl_core/api/routers/schedules.py:64-137).
+    *
+    * TCP_NODELAY: the JDK server writes a response's headers and body as
+    * two segments. With Nagle's algorithm on, the body waits for the ACK
+    * of the headers, which a loopback client delays by about 40 ms, so
+    * each small response waited ~40 ms. `serve` therefore sets the system
+    * property `sun.net.httpserver.nodelay=true`. The JDK reads it once,
+    * when its `sun.net.httpserver.ServerConfig` class is initialised by
+    * the first `HttpServer.create` in the JVM: a server created earlier by
+    * other code fixes the setting for every later server, this one
+    * included. */
   def serve(registry: JobRegistry, port: Int = 0,
             scheduler: Option[Scheduler] = None,
             maxConcurrentExecutions: Int = 6): HttpServer = {
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", port), 0)
     // Backpressure for the one expensive route: POST /execution runs a
     // full Spark job synchronously. The pool below bounds simultaneous
@@ -459,20 +482,13 @@ object ControlPlane {
             .getOrElse((404, s"""{"error":"execution $execId not found"}"""))
         case ("GET", p) if p.endsWith("/metrics") =>
           val execId = p.stripSuffix("/metrics")
-          registry.getExecution(execId).map(e => (200,
-            s"""{"lines_received":${countsJson(e.linesReceived)},""" +
-              s""""lines_forwarded":${linesJson(e)},""" +
-              s""""lines_dismissed":${countsJson(e.linesDismissed)},""" +
-              s""""throughput_rows_per_sec":${e.throughputRowsPerSec}}"""))
+          registry.getExecution(execId).map(e => (200, metricsJson(e)))
             .getOrElse((404, s"""{"error":"execution $execId not found"}"""))
         case ("GET", execId) if execId.nonEmpty =>
           // reference shape: { execution, attempts } (docs/cli.md:58-60)
           registry.getExecution(execId).map(e =>
             (200, s"""{"execution":${execJson(e)},"attempts":${attemptsJson(e)},""" +
-              s""""metrics":{"lines_received":${countsJson(e.linesReceived)},""" +
-              s""""lines_forwarded":${linesJson(e)},""" +
-              s""""lines_dismissed":${countsJson(e.linesDismissed)},""" +
-              s""""throughput_rows_per_sec":${e.throughputRowsPerSec}}}"""))
+              s""""metrics":${metricsJson(e)}}"""))
             .getOrElse((404, s"""{"error":"execution $execId not found"}"""))
         case ("GET", "") =>
           val q = qparams(ex)

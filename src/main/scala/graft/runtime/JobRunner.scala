@@ -1,7 +1,10 @@
 package graft.runtime
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.config.JobConfig.JobSpec
 import graft.graph.JobGraph
@@ -20,6 +23,17 @@ import graft.graph.JobGraph
  *    a zero-cost aggregate riding INSIDE the existing plan (no second
  *    scan, no accumulator races on retried tasks) — harvested by a
  *    QueryExecutionListener when each sink action completes;
+ *  - the harvest is complete when `run` returns, by ordering, not by a
+ *    timed settle: each sink action posts its `SparkListenerSQLExecutionEnd`
+ *    before it returns, and Spark's ExecutionListenerBus (which calls the
+ *    QueryExecutionListener) shares the bus's shared queue with every
+ *    `addSparkListener` listener. That queue delivers events one at a
+ *    time in post order. After the last attempt `run` posts a run-tagged
+ *    marker and waits (5 s deadline) for a listener on the same queue to
+ *    see it; by then every count of the run has been merged. A missed
+ *    deadline (the bus dropped the marker, or a slow listener holds the
+ *    queue) sets `RunResult.metricsComplete = false`, so a record with
+ *    missing counts says so rather than passing as complete;
  *  - job throughput = total forwarded rows / wall seconds.
  */
 object JobRunner {
@@ -48,7 +62,10 @@ object JobRunner {
       lastError: Option[Throwable],
       attemptRecords: Seq[Attempt] = Nil,
       linesReceived: Map[String, Long] = Map.empty,
-      linesDismissed: Map[String, Long] = Map.empty)
+      linesDismissed: Map[String, Long] = Map.empty,
+      metricsComplete: Boolean = true)
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Collects observed metrics named `graft.<tag>.<component>.<port>`.
     * The tag filter is the concurrency boundary: listeners register on
@@ -66,18 +83,30 @@ object JobRunner {
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
   }
 
+  /** Opens when the run's marker comes off the shared listener queue. */
+  private final class Barrier(tag: String) extends SparkListener {
+    val passed = new CountDownLatch(1)
+    override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+      case ListenerBusBridge.Marker(`tag`) => passed.countDown()
+      case _ => ()
+    }
+  }
+
   /** Build + run the job's sinks with the spec's retry budget. */
   def run(spark: SparkSession, spec: JobSpec,
           backoff: Backoff = Constant(1000),
           validateData: Boolean = false): RunResult = {
     val runTag = java.util.UUID.randomUUID().toString.replace("-", "")
     val listener = new MetricsListener(runTag)
+    val barrier = new Barrier(runTag)
     spark.listenerManager.register(listener)
+    spark.sparkContext.addSparkListener(barrier)
     val t0 = System.nanoTime()
     var attempt = 0
     var lastError: Option[Throwable] = None
     var succeeded = false
     val attemptLog = scala.collection.mutable.ArrayBuffer[Attempt]()
+    var metricsComplete = false
     try {
       while (!succeeded && attempt <= spec.numOfRetries) {
         if (attempt > 0) Thread.sleep(backoff.delayMs(attempt - 1))
@@ -103,15 +132,17 @@ object JobRunner {
           lastError.map(e => (e.getClass.getSimpleName + ": " +
             String.valueOf(e.getMessage)).take(300)))
       }
+    } finally try {
+      // every sink's SQLExecutionEnd is already on the shared queue, ahead
+      // of the marker; the queue delivers in order, so once the barrier
+      // sees the marker the QueryExecutionListener has merged them all
+      ListenerBusBridge.post(spark.sparkContext, ListenerBusBridge.Marker(runTag))
+      metricsComplete = barrier.passed.await(5, TimeUnit.SECONDS)
+      if (!metricsComplete)
+        log.warn(s"run ${spec.name} ($runTag): listener bus did not deliver the " +
+          "end-of-run marker within 5 s; the run's metrics are marked incomplete")
     } finally {
-      // listener callbacks run async on Spark's bus (no public flush);
-      // poll until the metric map settles before detaching
-      val deadline = System.currentTimeMillis() + 5000
-      var prev = -1
-      while (System.currentTimeMillis() < deadline && listener.rows.size != prev) {
-        prev = listener.rows.size
-        Thread.sleep(100)
-      }
+      spark.sparkContext.removeSparkListener(barrier)
       spark.listenerManager.unregister(listener)
       // Backstop for operator persists that fall through the build-thread
       // OpCaches scope (r20 ADVICE: a future operator deferring a persist
@@ -152,6 +183,6 @@ object JobRunner {
     val total = lines.values.sum
     RunResult(attempt, succeeded, wallMs, lines,
       if (wallMs == 0) 0.0 else total * 1000.0 / wallMs, lastError,
-      attemptLog.toSeq, received, dismissed)
+      attemptLog.toSeq, received, dismissed, metricsComplete)
   }
 }

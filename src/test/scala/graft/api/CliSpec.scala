@@ -63,6 +63,7 @@ class CliSpec extends SparkTestBase {
       assert(output.contains("needs a value"))
       assert(run("execution", "get", execId) === 0 && output.contains(jobId))
       assert(output.contains("\"attempts\":[{\"index\":1")) // reference get shape
+      assert(output.contains("\"metrics_complete\":true"))
       assert(run("execution", "attempts", execId) === 0)
       assert(output.contains("\"status\":\"SUCCESS\"") && output.startsWith("["))
       assert(run("execution", "get", "ghost") === 1)

@@ -164,6 +164,72 @@ class ControlPlaneSpec extends SparkTestBase {
     assert(regMem.listExecutions(limit = 10).size === 5)
   }
 
+  test("metrics_complete: persisted, absent key reloads as complete, served over REST") {
+    import spark.implicits._
+    val store = Files.createDirectories(
+      Paths.get("target", "test-tmp", "api", s"complete-${System.nanoTime()}"))
+    // a line written before the key existed, and an incomplete record
+    def line(id: String, extra: String) =
+      s"""{"id":"$id","job_id":"job-x","started_at_ms":1,"wall_ms":1,""" +
+        s""""status":"SUCCESS","attempts":1,"lines_forwarded":{"r.out":1},""" +
+        s""""throughput_rows_per_sec":0.0$extra,"attempt_list":[]}"""
+    Files.writeString(store.resolve("executions.jsonl"),
+      line("exec-1", "") + "\n" + line("exec-2", ""","metrics_complete":false""") + "\n")
+    val reg = new ControlPlane.JobRegistry(spark, Some(store))
+    assert(reg.getExecution("exec-1").get.metricsComplete)
+    assert(!reg.getExecution("exec-2").get.metricsComplete)
+
+    val in = tmp("complete_in")
+    graft.io.CsvIO.write(Seq(("1", "x")).toDF("a", "b"), in, singleFile = true)
+    val rec = reg.execute(reg.createJob(jobJson(in, tmp("complete_out"))).id)
+    assert(rec.metricsComplete)
+    val written = Files.readAllLines(store.resolve("executions.jsonl"))
+    assert(written.get(written.size - 1).contains(s""""id":"${rec.id}""""))
+    assert(written.get(written.size - 1).contains(""""metrics_complete":true"""))
+
+    val server = ControlPlane.serve(reg)
+    val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+    val client = HttpClient.newHttpClient()
+    def get(path: String): String =
+      client.send(HttpRequest.newBuilder(URI.create(base + path)).GET().build(),
+        HttpResponse.BodyHandlers.ofString()).body()
+    try {
+      assert(get("/execution/exec-2/metrics").contains("\"metrics_complete\":false"))
+      assert(get(s"/execution/${rec.id}/metrics").contains("\"metrics_complete\":true"))
+      assert(get("/execution/exec-2").contains("\"metrics_complete\":false"))
+    } finally ControlPlane.stop(server)
+  }
+
+  test("REST: a small GET answers in well under the 40 ms delayed-ACK stall") {
+    // with Nagle on, the body segment waits for the ACK of the header
+    // segment, which the loopback client delays by ~40 ms
+    import spark.implicits._
+    val reg = new ControlPlane.JobRegistry(spark)
+    val server = ControlPlane.serve(reg)
+    val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+    val client = HttpClient.newHttpClient()
+    def send(r: HttpRequest): HttpResponse[String] =
+      client.send(r, HttpResponse.BodyHandlers.ofString())
+    try {
+      val in = tmp("latency_in")
+      graft.io.CsvIO.write(Seq(("1", "x")).toDF("a", "b"), in, singleFile = true)
+      val job = reg.createJob(jobJson(in, tmp("latency_out")))
+      val exec = send(HttpRequest.newBuilder(URI.create(s"$base/execution/${job.id}"))
+        .POST(HttpRequest.BodyPublishers.noBody()).build())
+      assert(exec.statusCode() === 201)
+      val execId = """"id":"([^"]+)"""".r.findFirstMatchIn(exec.body()).get.group(1)
+      val metrics = HttpRequest.newBuilder(URI.create(s"$base/execution/$execId/metrics"))
+        .GET().build()
+      val ms = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        assert(send(metrics).statusCode() === 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      val median = (ms(9) + ms(10)) / 2
+      assert(median < 20.0, f"median $median%.1f ms over ${ms.map(m => f"$m%.1f").mkString(" ")}")
+    } finally ControlPlane.stop(server)
+  }
+
   test("/schedules REST: lifecycle with pause/resume/run-now/update") {
     import spark.implicits._
     val reg = new ControlPlane.JobRegistry(spark)

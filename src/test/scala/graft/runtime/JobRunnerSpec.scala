@@ -3,6 +3,9 @@ package graft.runtime
 import graft.SparkTestBase
 import graft.config.JobConfig
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
 class JobRunnerSpec extends SparkTestBase {
 
@@ -83,12 +86,14 @@ class JobRunnerSpec extends SparkTestBase {
     } finally pool.shutdown()
   }
 
-  test("dismissed uses the measured fail-port count when that branch runs") {
+  /** read → filter with both ports routed to their own csv sink, over 3
+    * rows of which 2 fail the rule: two sink actions per run. */
+  private def twoSinkJob(key: String): JobConfig.JobSpec = {
     import spark.implicits._
-    val in = tmp("in_fail_port")
+    val in = tmp(s"in_$key")
     graft.io.CsvIO.write(
       Seq(("1", "x"), ("2", "drop"), ("3", "drop")).toDF("a", "b"), in, singleFile = true)
-    val json =
+    JobConfig.parse(
       s"""{ "name": "t2", "components": [
          |  { "name": "r", "comp_type": "read_csv", "filepath": "$in",
          |    "routes": { "out": [ { "to": "f", "in_port": "in" } ] },
@@ -100,16 +105,62 @@ class JobRunnerSpec extends SparkTestBase {
          |                "fail": [ { "to": "wf", "in_port": "in" } ] },
          |    "out_port_schemas": { "pass": $abSchema, "fail": $abSchema } },
          |  { "name": "w", "comp_type": "write_csv",
-         |    "filepath": "${tmp("out_pass")}",
+         |    "filepath": "${tmp(s"out_pass_$key")}",
          |    "in_port_schemas": { "in": $abSchema } },
          |  { "name": "wf", "comp_type": "write_csv",
-         |    "filepath": "${tmp("out_fail_rows")}",
-         |    "in_port_schemas": { "in": $abSchema } } ] }""".stripMargin
-    val res = JobRunner.run(spark, JobConfig.parse(json))
+         |    "filepath": "${tmp(s"out_fail_rows_$key")}",
+         |    "in_port_schemas": { "in": $abSchema } } ] }""".stripMargin)
+  }
+
+  test("dismissed uses the measured fail-port count when that branch runs") {
+    val res = JobRunner.run(spark, twoSinkJob("fail_port"))
     assert(res.succeeded)
     assert(res.linesDismissed.get("f") === Some(2L))
     assert(res.linesReceived.get("f.in") === Some(3L))
     assert(res.linesForwarded.get("f.fail") === Some(2L))
+  }
+
+  /** Adds `l` to the session's shared listener queue — the queue that
+    * also carries the QueryExecutionListener's events — for `body`. */
+  private def withSharedQueueListener[A](l: SparkListener)(body: => A): A = {
+    spark.sparkContext.addSparkListener(l)
+    try body finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("a slow listener on the shared queue delays no count out of the record") {
+    // 300 ms per SQL execution end holds the second sink's end event on
+    // the queue well after the sink has returned: a harvest that waits a
+    // fixed time instead of for the queue misses that sink's counts
+    val slow = new SparkListener {
+      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+        case _: SparkListenerSQLExecutionEnd => Thread.sleep(300)
+        case _ => ()
+      }
+    }
+    val res = withSharedQueueListener(slow)(JobRunner.run(spark, twoSinkJob("slow_queue")))
+    assert(res.succeeded && res.metricsComplete)
+    assert(res.linesForwarded.get("f.fail") === Some(2L))
+    assert(res.linesForwarded.get("f.pass") === Some(1L))
+    assert(res.linesReceived.get("w.in") === Some(1L))
+    assert(res.linesReceived.get("wf.in") === Some(2L))
+  }
+
+  test("metrics are marked incomplete when the queue misses the 5 s deadline") {
+    // the listener holds the shared queue until run has returned, so the
+    // end-of-run marker cannot be delivered in time
+    val release = new CountDownLatch(1)
+    val blocking = new SparkListener {
+      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+        case _: SparkListenerSQLExecutionEnd => release.await(60, TimeUnit.SECONDS)
+        case _ => ()
+      }
+    }
+    val res = withSharedQueueListener(blocking) {
+      try JobRunner.run(spark, twoSinkJob("blocked_queue"))
+      finally release.countDown()
+    }
+    assert(res.succeeded)
+    assert(!res.metricsComplete)
   }
 
   test("retry loop: missing input exhausts attempts, reports last error") {
